@@ -26,14 +26,16 @@ object Bench {
       .foreach { fn =>
         try fn(spark, sfDir).count() catch { case _: Throwable => () }
       }
+    // a query that throws in any pass is failed: out of every total, exit 1
+    val failed = scala.collection.mutable.SortedSet.empty[String]
     def runSuite(): Map[String, Double] =
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => failed += name; false }
         val dt = (System.nanoTime() - t0) / 1e9
         // operators persist self-joined projections; clear between queries
         spark.catalog.clearCache()
-        name -> dt
+        Option.when(ok)(name -> dt)
       }.toMap
     // Variance guard (BASELINE.md "Measurement method"): the host is
     // multi-tenant with ±50-100% wall-clock noise on single-shot runs.
@@ -44,11 +46,13 @@ object Bench {
     // a pass, never speed it up), so per-query min estimates the
     // code's actual cost, not the host's worst moment. Three passes
     // (~1-2 min total) widen the window past most contention bursts.
-    val passes = Seq.fill(3)(runSuite())
+    val passes = Seq.fill(3)(runSuite()).map(_.filter { case (k, _) => !failed(k) })
     val results = passes.head.keys.map(k => k -> passes.map(_(k)).min).toMap
     def r3(v: Double): Double = math.rint(v * 1000) / 1000
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val pt = passes.map(_.values.sum)
+    def failedJson(key: String => String): String = if (failed.isEmpty) ""
+      else failed.toSeq.map("\"" + key(_) + "\"").mkString(""","failed":[""", ",", "]")
     val benchOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench.json")
     def fullJson: String = {
       val qs = results.toSeq.sortBy(_._1)
@@ -58,10 +62,10 @@ object Bench {
       // read — facts already adjudicated that would otherwise be
       // re-derived each round
       val notes =
-        """{"q254":"~11-15 s floor is fixed per-round stage overhead of the branching binary search at toy scale, adjudicated done in r11/r12; if it ever matters at real scale the envelope-seeding round count (probes/round) is the knob",""" +
+        """{"q254":"4.1-5.6 s since r17 (one tagged join per round, 73 -> 46 stages); the rest is fixed per-round stage overhead of the branching binary search at toy scale; if it ever matters at real scale the envelope-seeding round count (probes/round) is the knob",""" +
           """"suffix_index":"under min-of-3 the q245/q246/q260/q264 index builds are charged to pass_totals[0] only; later passes read the standing warehouse table (the amortization r11 sanctioned) - keep pass_totals visible so the build cost stays on the record",""" +
           """"fingerprint_memo":"r17: standing-table freshness fingerprints are memoized per (canonical plan, file signature (path,len,mtime)) - passes 2-3 skip the ~0.3 s (id,len) scan for UNCHANGED files only; any corpus file change forces a re-scan (StampedCatalogSpec pins it), so this is metadata-keyed derived-value caching, not result caching"}"""
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","pass_totals":[${pt.mkString(",")}],"method":"per-query min of 3 in-JVM passes","notes":$notes}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","pass_totals":[${pt.mkString(",")}]${failedJson(identity)},"method":"per-query min of 3 in-JVM passes","notes":$notes}"""
     }
     // full-fidelity record (every query name, full precision) to a file
     // for judge-side per-query analysis — PLUS a repo-local copy
@@ -97,7 +101,7 @@ object Bench {
     val slowest = results.toSeq.sortBy(-_._2).take(10)
       .map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" + r3(v) }
       .mkString("{", ",", "}")
-    val head = s"""{"metric":"total","unit":"sec","sf":"$sfDir","n_queries":${results.size},"pass_totals":[${pt.map(r3).mkString(",")}],"method":"per-query min of 3 in-JVM passes; full per-query map in $benchOut","queries_slowest10":$slowest"""
+    val head = s"""{"metric":"total","unit":"sec","sf":"$sfDir","n_queries":${results.size},"pass_totals":[${pt.map(r3).mkString(",")}]${failedJson(_.takeWhile(_ != '_'))},"method":"per-query min of 3 in-JVM passes; full per-query map in $benchOut","queries_slowest10":$slowest"""
     val lineBudget = 1850 - head.length - fixedTail.length
     val bySlow = results.toSeq.sortBy(-_._2)
       .map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" + r3(v) }
@@ -112,5 +116,6 @@ object Bench {
     val queriesJson = qsParts.mkString("{", ",", "}")
     println(s"""$head,"queries":$queriesJson,"value":${r3(total)}}""")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -37,13 +37,14 @@ object Sink {
   * against recorded fixtures; there is no egress in this environment).
   *
   * main.py:13-40 becomes one declarative plan:
-  *   company master -> best-file manifest -> per-format statement parse
-  *   -> union -> revenue transform -> guarded sink.
+  *   company master -> best-file manifest -> one-pass statement parse of
+  *   the winners -> revenue transform -> guarded sink.
   */
 object Pipeline {
 
-  /** Run over a directory of extracted statement files named per the
-    * `E{code}_{yyyymmdd}_{type}.{csv|xbrl}` convention. */
+  /** Run over a directory (subdirectories included) of extracted
+    * statement files named per the `E{code}_{yyyymmdd}_{type}.{csv|xbrl}`
+    * convention. */
   def run(spark: SparkSession, masterCsv: String, filesDir: String,
       outDir: String): Boolean = {
     val result = transform(spark, masterCsv, filesDir)
@@ -53,16 +54,22 @@ object Pipeline {
   def transform(spark: SparkSession, masterCsv: String, filesDir: String): DataFrame = {
     val companies = CompanyMaster.load(spark, masterCsv)
 
-    // Manifest from the landed files; ingest sequence from the filename's
-    // lexicographic order (stable stand-in for API return order). The
-    // sequence is derived PER ROW from fields already in the name —
-    // within a company (the only scope bestPerCompany compares seqs in),
-    // (submit_ymd, fmt) ordering IS filename ordering — so a
+    // ONE root path, listed on the driver: a `dir/*` glob makes every
+    // landed file a root path, which Spark lists with a job of one task
+    // per path. Subdirectories are kept and hidden/`_` files skipped, as
+    // with the glob; an empty directory is an empty frame.
+    val bin = spark.read.format("binaryFile")
+      .option("recursiveFileLookup", "true")
+      .load(filesDir)
+
+    // Manifest from the path column alone (binaryFile reads no content
+    // when `content` is not selected); ingest sequence from the
+    // filename's lexicographic order (stable stand-in for API return
+    // order). The sequence is derived PER ROW from fields already in the
+    // name — within a company (the only scope bestPerCompany compares
+    // seqs in), (submit_ymd, fmt) ordering IS filename ordering — so a
     // hundred-million-file manifest needs no global single-partition
     // window sort.
-    val bin = spark.read.format("binaryFile")
-      .load(s"$filesDir/*")
-      .select(col("path"), col("content"))
     val manifest = BestFile.parseManifest(bin.select(col("path")))
       .withColumn("seq",
         col("submit_ymd").cast("long") * 2 + (col("fmt") === "xbrl").cast("long"))
@@ -72,24 +79,14 @@ object Pipeline {
       .filter(col("doc_type").isin(targetDocTypes: _*))
     val best = BestFile.bestPerCompany(manifest)
 
-    // Parse only the winners (dedup-before-parse, SURVEY §4): semi-join
-    // the binary source against the selected manifest, then branch by
-    // format. The manifest is tiny -> broadcast semi-join.
-    val winners = bin.join(
-      broadcast(best.select(col("path"), col("fmt"), col("edinet_code"))),
-      Seq("path"))
-    val csvRows = StatementSources.parseCsvBytes(
-      spark, winners.filter(col("fmt") === "csv").select("path", "content"))
-    val xbrlRows = StatementSources.parseXbrlBytes(
-      spark, winners.filter(col("fmt") === "xbrl").select("path", "content"))
-    val stmts = csvRows.unionByName(xbrlRows)
+    // Parse only the winners (dedup-before-parse, SURVEY §4): one content
+    // scan, broadcast-joined to the tiny winner list, parsed in one pass
+    // that dispatches on format. Losers' bytes are read, never parsed.
+    val stmts = StatementSources.parseBytes(spark,
+      bin.select(col("path"), col("content"))
+        .join(broadcast(best.select(col("path"), col("fmt"))), Seq("path")))
 
-    // Attach edinet_code from the manifest (filename-as-metadata becomes
-    // a manifest column, SURVEY §1.1).
-    val withCode = stmts.join(
-      broadcast(best.select(col("path").as("file"), col("edinet_code"))),
-      Seq("file"))
-
-    RevenueTransform(withCode, companies)
+    // edinet_code is filename metadata (SURVEY §1.1), re-derived per row
+    RevenueTransform(BestFile.parseManifest(stmts, pathCol = "file"), companies)
   }
 }

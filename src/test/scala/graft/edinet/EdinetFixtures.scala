@@ -4,6 +4,8 @@ import java.nio.charset.Charset
 import java.nio.file.{Files, Path}
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Runtime-generated fixtures reproducing the reference's real input
   * formats (FIXTURES.md §A): cp932 company master, UTF-16 tab-separated
   * statement CSVs, namespaced XBRL, ZIP archives. Generated, not
@@ -110,4 +112,15 @@ object EdinetFixtures {
   }
 
   def tempDir(): Path = Files.createTempDirectory("edinet-fixture")
+
+  private def binaryFiles(spark: SparkSession, pathGlob: String): DataFrame =
+    spark.read.format("binaryFile").load(pathGlob).select("path", "content")
+
+  /** Statement rows of the UTF-16 TSV files matching `pathGlob`. */
+  def readCsv(spark: SparkSession, pathGlob: String): DataFrame =
+    StatementSources.parseCsvBytes(spark, binaryFiles(spark, pathGlob))
+
+  /** Statement rows of the XBRL files matching `pathGlob`. */
+  def readXbrl(spark: SparkSession, pathGlob: String): DataFrame =
+    StatementSources.parseXbrlBytes(spark, binaryFiles(spark, pathGlob))
 }

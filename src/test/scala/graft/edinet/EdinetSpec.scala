@@ -98,7 +98,7 @@ class StatementCsvSpec extends SparkSpec {
   test("UTF-16 TSV parse: row order, header stripped, values intact (S2)") {
     val dir = tempDir()
     writeStatementCsv(dir, "E00001_20240401_120.csv", statementCsvContent())
-    val rows = StatementSources.readCsv(spark, dir.toString + "/*.csv")
+    val rows = readCsv(spark, dir.toString + "/*.csv")
       .orderBy("row_idx").collect()
     assert(rows.length == 6)
     assert(rows(0).getAs[String](StmtCols.ElementId) == fiscalYearEndElement)
@@ -110,7 +110,7 @@ class StatementCsvSpec extends SparkSpec {
     val dir = tempDir()
     writeStatementCsv(dir, "E00001_20240401_120.csv",
       statementCsvContent().replace("\n", "\r\n"))
-    val rows = StatementSources.readCsv(spark, dir.toString + "/*.csv")
+    val rows = readCsv(spark, dir.toString + "/*.csv")
       .orderBy("row_idx").collect()
     assert(rows.length == 6)
     assert(rows(1).getAs[String](StmtCols.Value) == "5000")
@@ -121,7 +121,7 @@ class StatementCsvSpec extends SparkSpec {
     java.nio.file.Files.write(dir.resolve("E00009_20240401_120.csv"),
       Array[Byte](1, 2, 3, 4))
     writeStatementCsv(dir, "E00001_20240401_120.csv", statementCsvContent())
-    val rows = StatementSources.readCsv(spark, dir.toString + "/*.csv")
+    val rows = readCsv(spark, dir.toString + "/*.csv")
     assert(rows.select("file").distinct().count() == 1)
   }
 }
@@ -132,7 +132,7 @@ class XbrlSpec extends SparkSpec {
   test("StAX parse emits fiscal-year row + 5 revenue rows in doc order (S3)") {
     val dir = tempDir()
     writeXbrl(dir, "E00001_20240401_120.xbrl", xbrlContent())
-    val rows = StatementSources.readXbrl(spark, dir.toString + "/*.xbrl")
+    val rows = readXbrl(spark, dir.toString + "/*.xbrl")
       .orderBy("row_idx").collect()
     assert(rows.length == 6)
     assert(rows(0).getAs[String](StmtCols.ElementId) == fiscalYearEndElement)
@@ -146,7 +146,7 @@ class XbrlSpec extends SparkSpec {
   test("broken XML is skipped (N3)") {
     val dir = tempDir()
     writeXbrl(dir, "E00002_20240401_120.xbrl", "<not-xml")
-    val rows = StatementSources.readXbrl(spark, dir.toString + "/*.xbrl")
+    val rows = readXbrl(spark, dir.toString + "/*.xbrl")
     assert(rows.isEmpty)
   }
 
@@ -168,7 +168,7 @@ class XbrlSpec extends SparkSpec {
          |</x:root>""".stripMargin
     val dir = tempDir()
     writeXbrl(dir, "E00003_20240401_120.xbrl", xml)
-    val rows = StatementSources.readXbrl(spark, dir.toString + "/*.xbrl")
+    val rows = readXbrl(spark, dir.toString + "/*.xbrl")
       .orderBy("row_idx").collect()
     // fiscal row + exactly 3 emitted window values (100, 300, 400)
     assert(rows.length == 4)
@@ -272,5 +272,40 @@ class PipelineSpec extends SparkSpec {
     val wrote = Pipeline.run(spark, master, files.toString, dir.resolve("out").toString)
     assert(!wrote)
     assert(!java.nio.file.Files.exists(dir.resolve("out/japan_company_data")))
+  }
+
+  test("empty landing directory -> guarded, nothing written (N5)") {
+    val dir = tempDir()
+    val master = writeMasterCsv(dir).toString
+    val files = dir.resolve("files")
+    java.nio.file.Files.createDirectories(files)
+    val wrote = Pipeline.run(spark, master, files.toString, dir.resolve("out").toString)
+    assert(!wrote)
+    assert(!java.nio.file.Files.exists(dir.resolve("out/japan_company_data")))
+  }
+
+  test("landing directory: hidden, _-prefixed and off-convention files are " +
+      "ignored; filings in subdirectories are picked up") {
+    val dir = tempDir()
+    val master = writeMasterCsv(dir).toString
+    val files = dir.resolve("files")
+    java.nio.file.Files.createDirectories(files.resolve("sub"))
+    writeStatementCsv(files, "E00001_20240401_120.csv", statementCsvContent())
+    writeXbrl(files.resolve("sub"), "E00006_20240401_120.xbrl", xbrlContent())
+    // each would beat Alpha's filing as a correction if it were read: the
+    // unanchored filename pattern matches inside these names
+    writeStatementCsv(files, "_E00001_20240405_130.csv", statementCsvContent(
+      series = Seq(("CurrentYearDuration", "JPY", "111"))))
+    java.nio.file.Files.write(files.resolve(".E00001_20240405_130.csv.crc"),
+      Array[Byte](1, 2, 3, 4))
+    java.nio.file.Files.write(files.resolve("_SUCCESS"), Array.emptyByteArray)
+    writeStatementCsv(files, "E00002_report.csv", statementCsvContent())
+
+    val out = Pipeline.transform(spark, master, files.toString).collect()
+      .map(r => (r.getAs[String]("companyname"), r.getAs[Int]("year"), r.getAs[Long]("revenue")))
+      .sorted.toSeq
+    val years = 2020 to 2024
+    assert(out == years.map(y => ("Alpha Corp", y, (y - 2019) * 1000L)) ++
+      years.map(y => ("Zeta Holdings", y, (y - 2019) * 10000L)))
   }
 }
